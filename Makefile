@@ -1,15 +1,29 @@
 PY ?= python
+# cores Spark may use: get_spark defaults to local[32] without it (nproc
+# honours OMP_NUM_THREADS, so unset that first, as the tier-1 command does)
+NPROC := $(shell env -u OMP_NUM_THREADS nproc)
+SEED ?= 0
+TRACE ?= 0
 
-.PHONY: test test-fast bench correctness scaling pipeline zip clean
+.PHONY: test test-fast bench correctness scaling pipeline zip clean perfbench perfbench-test
 
 test:
-	$(PY) -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS=$(NPROC) $(PY) -m pytest tests/ -x -q
 
 test-fast:
 	$(PY) -m pytest tests/test_textnorm_oracle.py tests/test_corpus_training.py tests/test_properties.py -q
 
 bench:
 	$(PY) bench.py
+
+# the declared benchmark (BENCHMARK.json): both workloads, one run each;
+# TRACE=1 adds the per-layer sweep
+perfbench:
+	$(PY) perfbench/run.py --workload build --seed $(SEED) --seconds 1 --trace $(TRACE)
+	$(PY) perfbench/run.py --workload serve --seed $(SEED) --seconds 1 --trace $(TRACE)
+
+perfbench-test:
+	$(PY) -m pytest perfbench/tests -q
 
 correctness:
 	$(PY) tools/check_correctness.py

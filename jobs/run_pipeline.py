@@ -79,7 +79,8 @@ def main() -> int:
         # printed, and re-scanning the text would double the export I/O
         print(f"edges_nt     -> {nt_path}")
     lineage = spark.read.parquet(os.path.join(out, "lineage"))
-    print(f"lineage rows={lineage.count()} (per-partition checkpoints)")
+    print(f"lineage rows={lineage.count()} (one per write task: rows from "
+          "Parquet footers, bytes from file sizes)")
     print(f"output: {out}")
     spark.stop()
     return 0

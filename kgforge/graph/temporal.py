@@ -72,7 +72,6 @@ def materialize_edges_by_day(
         path,
         stage=stage,
         partition_by=["day"],
-        collect_lineage=False,
     )
 
 

@@ -125,9 +125,3 @@ def generate_punctuator_tag_mappings(
     semantics = sorted unique)."""
     unique_tags = sorted({tag for tags in tag_docs for tag in tags})
     return {tag: id for id, tag in enumerate(unique_tags)}
-
-
-def deterministic_split_key(key: str, val_permille: int = 200) -> str:
-    """O1 replacement: hash-of-key train/val assignment (val ≈ permille/1000)."""
-    h = int.from_bytes(hashlib.md5(f"split:{key}".encode()).digest()[:4], "big")
-    return "val" if (h % 1000) < val_permille else "train"

@@ -86,6 +86,26 @@ def test_resume_rebuilds_partial_uncommitted_write(spark, fixture_paths, tmp_pat
     assert _table_sig(spark, ent_dir) == sig
 
 
+def test_resume_rebuilds_committed_stage_with_lost_part_file(spark, fixture_paths, tmp_path):
+    """A committed manifest whose part file has since vanished (crash or
+    cleanup after commit) must not be trusted: resume rebuilds the stage
+    and reproduces the pre-crash table."""
+    webdocs_path, alias_path = fixture_paths
+    out = str(tmp_path / "run4")
+    run_pipeline(spark, webdocs_path, alias_path, out)
+    ent_dir = os.path.join(out, "entities")
+    sig = _table_sig(spark, ent_dir)
+    before = tables.read_manifest(ent_dir)
+    os.remove(os.path.join(
+        ent_dir, sorted(f for f in os.listdir(ent_dir) if f.startswith("part-"))[0]
+    ))
+    assert not tables.is_committed(ent_dir, "entities")
+    run_pipeline(spark, webdocs_path, alias_path, out, resume=True)
+    assert tables.read_manifest(ent_dir)["committed_at"] > before["committed_at"]
+    assert tables.is_committed(ent_dir, "entities")
+    assert _table_sig(spark, ent_dir) == sig
+
+
 def test_hot_key_present_in_fixture(spark, fixture_paths):
     # the designated hot entity should dominate mentions (~30% of docs)
     webdocs_path, _ = fixture_paths
