@@ -5,13 +5,21 @@ NPROC := $(shell env -u OMP_NUM_THREADS nproc)
 SEED ?= 0
 TRACE ?= 0
 
-.PHONY: test test-fast bench correctness scaling pipeline zip clean perfbench perfbench-test
+.PHONY: test test-fast test-kernel bench correctness scaling pipeline zip clean perfbench perfbench-test
 
 test:
 	SPARK_GRAFT_CPUS=$(NPROC) $(PY) -m pytest tests/ -x -q
 
 test-fast:
 	$(PY) -m pytest tests/test_textnorm_oracle.py tests/test_corpus_training.py tests/test_properties.py -q
+
+# the per-row Arrow kernel (kgforge/stages/rows.py) and every stage on it,
+# plus its retry gate (~2 min)
+test-kernel:
+	SPARK_GRAFT_CPUS=$(NPROC) $(PY) -m pytest -q tests/test_docstream.py \
+		tests/test_spark_normalize.py tests/test_extract.py tests/test_mentions.py \
+		tests/test_corpus_training.py tests/test_rechunk_distribution.py \
+		tests/test_subword_alignment.py tests/test_kernel_retry.py
 
 bench:
 	$(PY) bench.py

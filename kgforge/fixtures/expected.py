@@ -878,9 +878,13 @@ def _write(path: str, rows: list[dict], schema) -> None:
 
 
 def _fingerprint(tier: str, sf_dir: str) -> str:
+    # content hash, not size:mtime: a copy or re-checkout of identical
+    # documents must not regenerate (and re-stamp) the committed tables
     doc_pq = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(doc_pq) if os.path.exists(doc_pq) else None
-    doc_sig = f"{st.st_size}:{int(st.st_mtime)}" if st else "absent"
+    doc_sig = "absent"
+    if os.path.exists(doc_pq):
+        with open(doc_pq, "rb") as fh:
+            doc_sig = hashlib.sha256(fh.read()).hexdigest()[:16]
     return f"{EXPECTED_VERSION}|{tier}|{TIER_DOCS.get(tier, 300)}|{doc_sig}"
 
 

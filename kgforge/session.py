@@ -53,6 +53,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # non-local masters: executors do not inherit the driver's env
+        .config("spark.executorEnv.PYTHONPATH", repo_root)
         .config(
             "spark.driver.memory", os.environ.get("KGFORGE_DRIVER_MEMORY", "8g")
         )

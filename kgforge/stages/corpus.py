@@ -4,16 +4,16 @@ deterministic re-chunked training samples (S5/S6/R2/R3/R7, SURVEY §2).
 The reference round-trips through files between every step
 (data_process.py:59-67 → generate_corpus re-reads at :173); the engine
 keeps the data columnar end-to-end and only materializes the final TSV if
-an export path is given.
+an export path is given. Token/tag pairing and re-chunking are per-row
+oracle code on the shared ``flat_map_rows`` kernel.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgforge.stages.rows import flat_map_rows
 
 TOKEN_TAG_SCHEMA = "doc_id string, tokens array<string>, tags array<string>"
 CHUNK_SCHEMA = (
@@ -25,24 +25,16 @@ def token_tag_corpus(
     cleaned: DataFrame, ner_mapping: dict[str, str] | None = None
 ) -> DataFrame:
     """cleaned(doc_id, line) → (doc_id, tokens, tags) via the oracle
-    ``process_line`` state machine (R2) in one Arrow-batched stage."""
+    ``process_line`` state machine (R2), one row per line."""
+    from kgforge.textnorm.cleaning import process_line
     from kgforge.textnorm.constants import DEFAULT_ENGLISH_NER_MAPPING
 
     mapping = ner_mapping or DEFAULT_ENGLISH_NER_MAPPING
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgforge.textnorm.cleaning import process_line
+    def fn(doc_id, line):
+        yield (doc_id, *process_line(line or "", mapping))
 
-        for pdf in batches:
-            ids, toks, tags = [], [], []
-            for doc_id, line in zip(pdf["doc_id"].tolist(), pdf["line"].tolist()):
-                token_list, tag_list = process_line(line or "", mapping)
-                ids.append(doc_id)
-                toks.append(token_list)
-                tags.append(tag_list)
-            yield pd.DataFrame({"doc_id": ids, "tokens": toks, "tags": tags})
-
-    return cleaned.select("doc_id", "line").mapInPandas(run, TOKEN_TAG_SCHEMA)
+    return flat_map_rows(cleaned, ["doc_id", "line"], TOKEN_TAG_SCHEMA, lambda: fn)
 
 
 def rechunk_corpus(
@@ -51,37 +43,20 @@ def rechunk_corpus(
     """R3: deterministic per-doc re-chunking into training samples —
     chunk lengths are hash-of-(doc_id, chunk_ordinal), so output is
     identical under any partitioning or resume (SURVEY §4.3-5)."""
+    from kgforge.textnorm.corpus import rechunk_doc
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgforge.textnorm.corpus import rechunk_doc
+    def fn(doc_id, tokens, tags):
+        chunks = rechunk_doc(
+            list(tokens),
+            list(tags),
+            str(doc_id),
+            min_sequence_length,
+            max_sequence_length,
+        )
+        for cid, (tok, tag) in enumerate(chunks):
+            yield doc_id, cid, tok, tag
 
-        for pdf in batches:
-            ids, cids, toks, tags = [], [], [], []
-            for doc_id, token_list, tag_list in zip(
-                pdf["doc_id"].tolist(), pdf["tokens"].tolist(), pdf["tags"].tolist()
-            ):
-                chunks = rechunk_doc(
-                    list(token_list),
-                    list(tag_list),
-                    str(doc_id),
-                    min_sequence_length,
-                    max_sequence_length,
-                )
-                for cid, (tok, tag) in enumerate(chunks):
-                    ids.append(doc_id)
-                    cids.append(cid)
-                    toks.append(tok)
-                    tags.append(tag)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_id": pd.Series(cids, dtype="int32"),
-                    "tokens": toks,
-                    "tags": tags,
-                }
-            )
-
-    return corpus.mapInPandas(run, CHUNK_SCHEMA)
+    return flat_map_rows(corpus, ["doc_id", "tokens", "tags"], CHUNK_SCHEMA, lambda: fn)
 
 
 def token_tag_rows(corpus: DataFrame) -> DataFrame:

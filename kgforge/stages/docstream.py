@@ -4,91 +4,48 @@ The modular stages (normalize / sentences / triples) each cross the
 JVM↔Python boundary; chained, a task holds two live Python workers and
 pays worker startup twice. For the throughput path (the part that scales
 with a 100-TB corpus) this stage fuses normalize + sentence split + triple
-extraction into a single ``mapInPandas`` — one worker per task, one Arrow
-crossing, identical output to ``triples(sentences(normalize(webdocs)))``
-(asserted by tests/test_docstream.py). The driver pre-computes the
-full-Unicode CURRENCY pattern and ships it in the closure so workers skip
-the ~1s per-process scan (SURVEY.md §4.1).
+extraction into a single ``flat_map_rows`` stage — one worker per task,
+one Arrow crossing, identical output to
+``triples(sentences(normalize(webdocs)))`` (asserted by
+tests/test_docstream.py). Taggers and the driver-scanned CURRENCY pattern
+come from ``normalize.punctuator``, so workers skip the ~1s per-process
+scan (SURVEY.md §4.1).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from kgforge.extract.triples import doc_triples
 from kgforge.stages.extract import TRIPLES_SCHEMA
-from kgforge.stages.normalize import _tag_map
-from kgforge.textnorm.constants import currency_regex_pattern
-from kgforge.textnorm.pipeline import DEFAULT_MAX_SEQUENCE_LENGTH, punctuate_one
+from kgforge.stages.normalize import punctuator
+from kgforge.stages.rows import flat_map_rows
 
 
 def extract_docstream(
-    webdocs: DataFrame,
-    backend: str = "mock",
-    max_sequence_length: int = DEFAULT_MAX_SEQUENCE_LENGTH,
-    **backend_kwargs,
+    webdocs: DataFrame, backend: str = "mock", **backend_kwargs
 ) -> DataFrame:
     """webdocs(url, warc_ts, html, text, lang) → triples_raw(url, warc_ts,
     sent_id, subj, pred, obj, conf), fused."""
-    currency_pattern = currency_regex_pattern()  # driver-side scan, shipped
+    new_punct = punctuator(backend, **backend_kwargs)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgforge.textnorm.constants import prime_currency_pattern
-        from kgforge.textnorm.tagger import get_tagger
+    def make_fn():
+        punct = new_punct()
 
-        prime_currency_pattern(currency_pattern)
-        taggers: dict[str, object] = {}
-        for pdf in batches:
-            urls, tss, sids = [], [], []
-            subjs, preds, objs, confs = [], [], [], []
-            # plain-list iteration: pandas Series iteration is ~2× slower
-            for url, ts, text, lang in zip(
-                pdf["url"].tolist(),
-                pdf["warc_ts"].tolist(),
-                pdf["text"].tolist(),
-                pdf["lang"].tolist(),
-            ):
-                lang = lang or "en"
-                tagger = taggers.get(lang)
-                if tagger is None:
-                    tagger = get_tagger(backend, lang, **backend_kwargs)
-                    taggers[lang] = tagger
-                text_norm, _labels = punctuate_one(
-                    text or "", tagger, _tag_map(lang), max_sequence_length
-                )
-                for sent_id, subj, pred, obj, conf in doc_triples(text_norm, lang):
-                    urls.append(url)
-                    tss.append(ts)
-                    sids.append(sent_id)
-                    subjs.append(subj)
-                    preds.append(pred)
-                    objs.append(obj)
-                    confs.append(conf)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "warc_ts": pd.Series(tss, dtype="datetime64[us]"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "subj": pd.Series(subjs, dtype="object"),
-                    "pred": pd.Series(preds, dtype="object"),
-                    "obj": pd.Series(objs, dtype="object"),
-                    "conf": pd.Series(confs, dtype="float64"),
-                }
-            )
+        def fn(url, ts, text, lang):
+            lang, text_norm, _labels = punct(text, lang)
+            for sent_id, subj, pred, obj, conf in doc_triples(text_norm, lang):
+                yield url, ts, sent_id, subj, pred, obj, conf
 
-    src = webdocs.select("url", "warc_ts", "text", "lang")
-    return src.mapInPandas(run, TRIPLES_SCHEMA)
+        return fn
+
+    return flat_map_rows(
+        webdocs, ["url", "warc_ts", "text", "lang"], TRIPLES_SCHEMA, make_fn
+    )
 
 
 def scan_mentions_docstream(
-    webdocs: DataFrame,
-    aliases: list[str],
-    backend: str = "mock",
-    max_sequence_length: int = DEFAULT_MAX_SEQUENCE_LENGTH,
-    **backend_kwargs,
+    webdocs: DataFrame, aliases: list[str], backend: str = "mock", **backend_kwargs
 ) -> DataFrame:
     """Fused gazetteer path: webdocs → (url, sent_id, mention) in ONE
     Python stage (punctuate + sentence split + leftmost-longest alias scan
@@ -99,47 +56,23 @@ def scan_mentions_docstream(
     from kgforge.extract.triples import split_sentences
     from kgforge.linking.mentions import build_mention_index, find_mentions
 
-    currency_pattern = currency_regex_pattern()
     en_index, zh_aliases = build_mention_index(aliases)
+    new_punct = punctuator(backend, **backend_kwargs)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgforge.textnorm.constants import prime_currency_pattern
-        from kgforge.textnorm.tagger import get_tagger
+    def make_fn():
+        punct = new_punct()
 
-        prime_currency_pattern(currency_pattern)
-        taggers: dict[str, object] = {}
-        for pdf in batches:
-            urls: list[str] = []
-            sids: list[int] = []
-            surfaces: list[str] = []
-            for url, text, lang in zip(
-                pdf["url"].tolist(), pdf["text"].tolist(), pdf["lang"].tolist()
-            ):
-                lang = lang or "en"
-                tagger = taggers.get(lang)
-                if tagger is None:
-                    tagger = get_tagger(backend, lang, **backend_kwargs)
-                    taggers[lang] = tagger
-                text_norm, _labels = punctuate_one(
-                    text or "", tagger, _tag_map(lang), max_sequence_length
-                )
-                for sent_id, sentence in enumerate(
-                    split_sentences(text_norm, lang)
-                ):
-                    for surface in find_mentions(
-                        sentence, lang, en_index, zh_aliases
-                    ):
-                        urls.append(url)
-                        sids.append(sent_id)
-                        surfaces.append(surface)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "mention": pd.Series(surfaces, dtype="object"),
-                }
-            )
+        def fn(url, text, lang):
+            lang, text_norm, _labels = punct(text, lang)
+            for sent_id, sentence in enumerate(split_sentences(text_norm, lang)):
+                for surface in find_mentions(sentence, lang, en_index, zh_aliases):
+                    yield url, sent_id, surface
 
-    return webdocs.select("url", "text", "lang").mapInPandas(
-        run, "url string, sent_id int, mention string"
+        return fn
+
+    return flat_map_rows(
+        webdocs,
+        ["url", "text", "lang"],
+        "url string, sent_id int, mention string",
+        make_fn,
     )

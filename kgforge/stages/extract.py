@@ -2,20 +2,19 @@
 
 Sentence split is pure JVM-side Catalyst work (``split`` + ``posexplode``
 inside WholeStageCodegen — no shuffle, no Python). Triple extraction calls
-the shared pure extractor (kgforge.extract.triples) inside one Arrow-batched
-``mapInPandas``. Neither stage shuffles; parallelism is inherited from the
-input partitioning, so the plan scales linearly with executors.
+the shared pure extractor (kgforge.extract.triples) per sentence row on
+the Arrow-batched ``flat_map_rows`` kernel. Neither stage shuffles;
+parallelism is inherited from the input partitioning, so the plan scales
+linearly with executors.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgforge.extract.triples import extract_triples
+from kgforge.stages.rows import flat_map_rows
 
 SENTENCES_SCHEMA = (
     "url string, warc_ts timestamp, lang string, sent_id int, sentence string"
@@ -50,43 +49,16 @@ def sentences(norm: DataFrame) -> DataFrame:
     )
 
 
+def _sentence_triples(url, ts, lang, sid, sentence):
+    for subj, pred, obj, conf in extract_triples(sentence, lang or "en"):
+        yield url, ts, sid, subj, pred, obj, conf
+
+
 def triples(sentences_df: DataFrame) -> DataFrame:
-    """sentences → triples_raw(url, sent_id, subj, pred, obj, conf)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list[str] = []
-            tss: list = []
-            sids: list[int] = []
-            subjs: list[str] = []
-            preds: list[str] = []
-            objs: list[str] = []
-            confs: list[float] = []
-            for url, ts, lang, sid, sentence in zip(
-                pdf["url"].tolist(),
-                pdf["warc_ts"].tolist(),
-                pdf["lang"].tolist(),
-                pdf["sent_id"].tolist(),
-                pdf["sentence"].tolist(),
-            ):
-                for subj, pred, obj, conf in extract_triples(sentence, lang or "en"):
-                    urls.append(url)
-                    tss.append(ts)
-                    sids.append(sid)
-                    subjs.append(subj)
-                    preds.append(pred)
-                    objs.append(obj)
-                    confs.append(conf)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "warc_ts": pd.Series(tss, dtype="datetime64[us]"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "subj": pd.Series(subjs, dtype="object"),
-                    "pred": pd.Series(preds, dtype="object"),
-                    "obj": pd.Series(objs, dtype="object"),
-                    "conf": pd.Series(confs, dtype="float64"),
-                }
-            )
-
-    return sentences_df.mapInPandas(run, TRIPLES_SCHEMA)
+    """sentences → triples_raw(url, warc_ts, sent_id, subj, pred, obj, conf)."""
+    return flat_map_rows(
+        sentences_df,
+        ["url", "warc_ts", "lang", "sent_id", "sentence"],
+        TRIPLES_SCHEMA,
+        lambda: _sentence_triples,
+    )

@@ -13,6 +13,10 @@ Relational formulation of the reference-free linking design:
    (score desc, entity_id asc tie-break);
 5. unmatched mentions become self-entities ``M#<hash>`` so downstream
    canonicalization sees a total mapping.
+
+The in-text gazetteer scan (``scan_mentions``) is per-row Python on the
+shared ``flat_map_rows`` kernel; ``link_fuzzy`` scores a whole Arrow batch
+at once (one einsum), so it keeps its own ``mapInPandas``.
 """
 
 from __future__ import annotations
@@ -22,6 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
+
+from kgforge.stages.rows import flat_map_rows
 
 ENTITIES_SCHEMA = "mention string, entity_id string, canon string, score double"
 
@@ -140,43 +146,25 @@ def scan_mentions(sentences_df: DataFrame, aliases: list[str]) -> DataFrame:
     leftmost-longest (kgforge.linking.mentions — pure matcher shared with
     the oracle twin). The alias list is dictionary-bounded (same size
     assumption as every broadcast join here) and ships in the closure; the
-    scan itself is one Arrow-batched stage, no shuffle, parallelism
+    scan itself is one ``flat_map_rows`` stage, no shuffle, parallelism
     inherited from the input — the 100-TB-side cost is one pass over the
     sentences. Canonical ids come from a later broadcast join against the
     alias map (link_with_map), keeping matcher and linking decoupled."""
-    from typing import Iterator
-
     from kgforge.linking.mentions import build_mention_index, find_mentions
 
     en_index, zh_aliases = build_mention_index(aliases)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list[str] = []
-            sids: list[int] = []
-            surfaces: list[str] = []
-            for url, lang, sid, sentence in zip(
-                pdf["url"].tolist(),
-                pdf["lang"].tolist(),
-                pdf["sent_id"].tolist(),
-                pdf["sentence"].tolist(),
-            ):
-                for surface in find_mentions(
-                    sentence or "", lang or "en", en_index, zh_aliases
-                ):
-                    urls.append(url)
-                    sids.append(sid)
-                    surfaces.append(surface)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "mention": pd.Series(surfaces, dtype="object"),
-                }
-            )
+    def fn(url, lang, sid, sentence):
+        for surface in find_mentions(
+            sentence or "", lang or "en", en_index, zh_aliases
+        ):
+            yield url, sid, surface
 
-    return sentences_df.select("url", "lang", "sent_id", "sentence").mapInPandas(
-        run, "url string, sent_id int, mention string"
+    return flat_map_rows(
+        sentences_df,
+        ["url", "lang", "sent_id", "sentence"],
+        "url string, sent_id int, mention string",
+        lambda: fn,
     )
 
 

@@ -5,12 +5,14 @@ at sf0.01 lives in tools/check_correctness.py; this locks the mechanism
 into the pytest suite."""
 
 import math
+import os
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entry
-from kgforge.fixtures.expected import ensure_expected
+from kgforge.fixtures.expected import _fingerprint, ensure_expected
 
 TIER = "sf0.001"
 SF_DIR = f"/root/testdata/{TIER}"
@@ -19,6 +21,15 @@ SF_DIR = f"/root/testdata/{TIER}"
 @pytest.fixture(scope="module")
 def expected_paths():
     return ensure_expected(TIER, SF_DIR)
+
+
+def test_fingerprint_ignores_documents_mtime(tmp_path):
+    """A copied or re-checked-out documents.parquet keeps the stamp, so the
+    committed tables are neither regenerated nor re-stamped."""
+    copy = tmp_path / "documents.parquet"
+    shutil.copy(os.path.join(SF_DIR, "documents.parquet"), copy)
+    os.utime(copy, (0, 0))
+    assert _fingerprint(TIER, str(tmp_path)) == _fingerprint(TIER, SF_DIR)
 
 
 def _expected_rows(path: str) -> set[tuple]:

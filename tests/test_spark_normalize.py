@@ -1,7 +1,8 @@
 """Stage-2 gate (SURVEY.md §5.2-2): byte-identity of the Spark normalize
 stage vs the single-node oracle, for EVERY url, on a fixture slice that
-includes long (chunked) docs, Chinese docs, and maskable tokens. Plus plan
-checks: column pruning of ``html`` and no shuffle in the normalize plan."""
+includes long (chunked) docs, Chinese docs, and maskable tokens; null and
+blank docs normalize to empty text in one chunk. Plus plan checks: column
+pruning of ``html`` and no shuffle in the normalize plan."""
 
 import pytest
 
@@ -13,6 +14,7 @@ from kgforge.textnorm.constants import (
 )
 from kgforge.textnorm.pipeline import punctuate_one
 from kgforge.textnorm.tagger import MockTagger
+from tests.test_docstream import null_docs
 
 N_DOCS = 300
 
@@ -57,6 +59,15 @@ def test_byte_identity_spark_vs_oracle(spark, webdocs_path):
     assert len(got) == N_DOCS
     mismatches = [u for u in want if got[u] != want[u]]
     assert mismatches == [], f"{len(mismatches)} urls differ, e.g. {mismatches[:3]}"
+
+
+def test_null_and_blank_docs(spark):
+    got = {r["url"]: r for r in normalize(null_docs(spark)).collect()}
+    for url in ("u:null-text", "u:blank-zh"):
+        assert got[url]["text_norm"] == "" and got[url]["labels"] == []
+        assert got[url]["n_tokens"] == 0 and got[url]["n_chunks"] == 1
+    assert got["u:null-lang"]["lang"] == "en" and got["u:null-lang"]["text_norm"]
+    assert got["u:null-ts"]["warc_ts"] is None and got["u:null-ts"]["text_norm"]
 
 
 def test_html_column_pruned(spark, webdocs_path):
