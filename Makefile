@@ -5,7 +5,7 @@ NPROC := $(shell env -u OMP_NUM_THREADS nproc)
 SEED ?= 0
 TRACE ?= 0
 
-.PHONY: test test-fast test-kernel bench correctness scaling pipeline zip clean perfbench perfbench-test
+.PHONY: test test-fast test-kernel bench plans correctness scaling pipeline zip clean perfbench perfbench-test
 
 test:
 	SPARK_GRAFT_CPUS=$(NPROC) $(PY) -m pytest tests/ -x -q
@@ -24,6 +24,13 @@ test-kernel:
 bench:
 	$(PY) bench.py
 
+# explain("formatted") of every bench phase (+ three contract queries), one
+# file per plan (~1 min); for a before/after, run tools/dump_plans.py into
+# two dirs
+plans:
+	KGFORGE_BENCH_DOCS=2000 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_CPUS=$(NPROC) \
+		$(PY) tools/dump_plans.py /tmp/kgforge_plans
+
 # the declared benchmark (BENCHMARK.json): both workloads, one run each;
 # TRACE=1 adds the per-layer sweep
 perfbench:
@@ -37,7 +44,7 @@ correctness:
 	$(PY) tools/check_correctness.py
 
 scaling:
-	$(PY) tools/run_scaling.py --docs 300000 --levels 4,16 --repeats 2
+	SPARK_GRAFT_CPUS=$(NPROC) $(PY) tools/run_scaling.py --docs 300000 --levels 1,4 --repeats 2
 
 skew:
 	$(PY) tools/run_skew_bench.py --edges 1000000 --cpus 16

@@ -1,28 +1,85 @@
 #!/usr/bin/env python
-"""Benchmark harness — one JSON line on stdout.
+"""Benchmark harness: one registry of named phases, one JSON line on stdout.
 
-Two parts:
+Each phase is declared once in ``PHASES``: a plan builder, its action
+(``count()`` unless the phase says otherwise) and the shared state it needs
+built first. Three tools read the registry:
+
+- ``python bench.py`` runs every phase once, in registry order.
+- ``python bench.py PHASE [PHASE ...] [--repeat N]`` runs only those phases
+  (in registry order) plus, untimed, whatever they need; ``queries`` holds
+  the minimum over the repeats and each repeat's times go to stderr.
+- ``tools/dump_plans.py`` writes each phase's (or contract query's) plan.
+
+Phases:
 1. Representative operator queries from the driver contract at
-   ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1).
+   ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1), plus unbounded
+   near-dup variants over the full documents table.
 2. The KG document stream (fused normalize → sentences → triples →
-   canonical rewrite) over a parquet webdocs fixture generated once into a
-   temp dir (generation timed separately so kg numbers measure Spark work,
-   not driver-side fixture hashing) — reports docs/sec.
+   canonical rewrite) over a parquet webdocs fixture of
+   ``$KGFORGE_BENCH_DOCS`` docs (default 30000), generated once into a temp
+   dir or read from ``--fixture-dir`` (generation is timed separately, as
+   ``kg_fixture_gen_sec``), then graph reads over the day-partitioned edges.
 
-Runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32). Scaling-efficiency
-evidence (local[4] vs local[16], north rule N vs 4N) lives in
-tools/run_scaling.py → BENCH.md.
+Runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); every Spark job carries
+its phase name as job description. Scaling (N vs 4N cores) is
+tools/run_scaling.py, which runs this file once per core count.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
+from dataclasses import dataclass
+from functools import cached_property
+from types import SimpleNamespace
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+import pyarrow.dataset as pads  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from __spark_entry__ import queries  # noqa: E402
+from kgforge.extract.predicates import canonicalize_predicates  # noqa: E402
+from kgforge.fixtures.gen import write_fixture_tables  # noqa: E402
+from kgforge.graph.analytics import (  # noqa: E402
+    daily_active_nodes_approx,
+    entity_profile,
+    entity_profile_table_approx,
+    label_propagation,
+    triangle_counts,
+    two_hop_reach_approx,
+)
+from kgforge.graph.bgp import match_bgp  # noqa: E402
+from kgforge.graph.paths import reachable_from  # noqa: E402
+from kgforge.graph.temporal import (  # noqa: E402
+    WINDOW_HI,
+    WINDOW_LO,
+    materialize_edges_by_day,
+    window_subgraph_topk,
+)
+from kgforge.graph.wcoj import match_bgp_cycle  # noqa: E402
+from kgforge.linking.guard import collect_bounded  # noqa: E402
+from kgforge.queries import (  # noqa: E402
+    BENCH_QUERIES,
+    minhash_lsh_candidates_agg,
+    near_dup_clusters_from_pairs,
+    ngram_jaccard_verified_pairs,
+)
+from kgforge.session import get_spark, warm_python_workers  # noqa: E402
+from kgforge.stages.canonicalize import edges_with_day, rewrite_triples  # noqa: E402
+from kgforge.stages.docstream import (  # noqa: E402
+    extract_docstream,
+    scan_mentions_docstream,
+)
+from kgforge.stages.link import alias_resolution  # noqa: E402
+from kgforge.stages.normalize import normalize  # noqa: E402
 
 HEADLINE = [
     "pricing_summary",
@@ -43,337 +100,412 @@ HEADLINE = [
 
 KG_BENCH_DOCS = int(os.environ.get("KGFORGE_BENCH_DOCS", "30000"))
 
+# works-at / acquired / works-at triangle: both legs of the hub wedge run
+# through the fixture's 30%-hot entity
+CYCLE = [
+    ("?a", "works at", "?b"),
+    ("?b", "acquired", "?c"),
+    ("?c", "works at", "?a"),
+]
 
-def run_bench(sf_dir: str, cpus: str) -> dict:
-    from pyspark.sql import functions as F
 
-    from __spark_entry__ import queries
-    from kgforge.fixtures.gen import write_fixture_tables
-    from kgforge.session import get_spark
-    from kgforge.stages.canonicalize import rewrite_triples
-    from kgforge.stages.docstream import extract_docstream
-    from kgforge.stages.link import alias_resolution
-    from kgforge.stages.normalize import normalize
+def contract_queries() -> dict[str, Callable]:
+    """The driver contract plus the per-operator members of its
+    consolidated families (bench times operators individually even though
+    the contract records them through family queries)."""
+    return {**BENCH_QUERIES, **queries()}
 
-    n_cores = int(cpus) if cpus.isdigit() else 32
-    spark = get_spark(
-        "kgforge-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(16, n_cores * 2),
-        arrow_batch=2048,
-    )
-    # NOTE: spark.sql.files.maxPartitionBytes stays at the 128MB default
-    # here — the round-2 bench set 2MB globally to give the small KG
-    # fixture enough input splits, which silently fragmented the TPC-H
-    # scans into hundreds of micro-tasks (pricing_summary 8.1s → 0.7s at
-    # the default). The small-split config is applied at runtime to the
-    # KG phases only, below.
-    # contract registry + the per-operator members of the round-5
-    # consolidated families (bench times operators individually even
-    # though the driver contract records them through family queries)
-    from kgforge.queries import BENCH_QUERIES
 
-    qs = {**BENCH_QUERIES, **queries()}
-    # JVM/session warmup OUTSIDE the timed loop: the first action pays
-    # session init + whole-stage-codegen compilation (~5 s) which the
-    # FIRST headline query (pricing_summary) was silently absorbing —
-    # measured 6.5 s recorded vs ~0.7 s steady-state. Same discipline as
-    # warm_python_workers for the KG phases: steady-state cost is the
-    # quantity that scales, startup amortizes to zero on a real cluster.
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1000).groupBy(
-        "l_returnflag"
-    ).count().collect()
-    timings: dict[str, float] = {}
-    total = 0.0
-    for name in HEADLINE:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).count()
-        dt = round(time.perf_counter() - t0, 3)
-        timings[name] = dt
-        total += dt
+def _count(b: Bench, plan):
+    if isinstance(plan, tuple):
+        return [df.count() for df in plan]
+    return plan.count()
 
-    # UNBOUNDED near-dup variants (scale evidence): the contract queries
-    # bound doc_id < 500 for oracle cost; these run the same plans over the
-    # FULL documents table and report candidate counts, demonstrating the
-    # hot-shingle DF cap keeps candidates ~linear in corpus size.
-    from kgforge.queries import (
-        minhash_lsh_candidates_agg,
-        near_dup_clusters_from_pairs,
-        ngram_jaccard_verified_pairs,
-    )
 
-    docs_full = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n_docs_tbl = docs_full.count()
-    # materialize the verified pairs ONCE (localCheckpoint) — the agg view
-    # and the cluster stage both read them, exactly as a production dedup
-    # would (you don't re-shingle the corpus to cluster its pairs)
-    t0 = time.perf_counter()
-    pairs = ngram_jaccard_verified_pairs(docs_full).localCheckpoint()
-    jac_row = pairs.agg(
+def _first_row(b: Bench, df):
+    return df.collect()[0]
+
+
+@dataclass(frozen=True)
+class Phase:
+    # plan builder: a DataFrame, or a tuple of them for a phase that times
+    # several frames; may run Spark jobs itself (driver-paced operators)
+    build: Callable
+    # (bench, plan) -> result
+    act: Callable = _count
+    # Bench attributes or phase names made, untimed, before the phase
+    needs: tuple[str, ...] = ()
+
+
+PHASES: dict[str, Phase] = {}
+
+
+def phase(name: str, build: Callable, *needs: str, act: Callable = _count) -> None:
+    PHASES[name] = Phase(build, act, needs)
+
+
+for _name in HEADLINE:
+    phase(_name, lambda b, n=_name: b.contract[n](b.spark, b.sf_dir), "warm_jvm")
+
+# UNBOUNDED near-dup variants (scale evidence): the contract queries bound
+# doc_id < 500 for oracle cost; these run the same plans over the FULL
+# documents table, showing the hot-shingle DF cap keeps candidates ~linear
+# in corpus size.
+
+
+def _checkpoint_pairs(b: Bench, df):
+    # the verified pairs are materialized ONCE: the agg view and the cluster
+    # phase both read them, as a production dedup would (you don't
+    # re-shingle the corpus to cluster its pairs)
+    pairs = df.localCheckpoint()
+    n_pairs = pairs.agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.round(F.coalesce(F.avg("jaccard"), F.lit(0.0)), 6).alias("avg_jaccard"),
-    ).collect()[0]
-    timings["ngram_jaccard_unbounded"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    mh_row = minhash_lsh_candidates_agg(docs_full).collect()[0]
-    timings["minhash_lsh_unbounded"] = round(time.perf_counter() - t0, 3)
-    # cluster formation + survivor selection over the verified pairs —
-    # the full dedup operation (pairs → CC → survivors) at corpus scale
-    t0 = time.perf_counter()
-    cl_row = (
-        near_dup_clusters_from_pairs(pairs)
-        .agg(
-            F.count(F.lit(1)).alias("n_clusters"),
-            F.coalesce(F.sum("n_removed"), F.lit(0)).alias("n_removed"),
+    ).collect()[0]["n_pairs"]
+    return pairs, n_pairs
+
+
+phase(
+    "ngram_jaccard_unbounded",
+    lambda b: ngram_jaccard_verified_pairs(b.docs_full),
+    "docs_full",
+    act=_checkpoint_pairs,
+)
+phase(
+    "minhash_lsh_unbounded",
+    lambda b: minhash_lsh_candidates_agg(b.docs_full),
+    "docs_full",
+    act=_first_row,
+)
+# cluster formation + survivor selection over the verified pairs: the full
+# dedup operation (pairs → CC → survivors) at corpus scale
+phase(
+    "near_dup_clusters_unbounded",
+    lambda b: near_dup_clusters_from_pairs(b.results["ngram_jaccard_unbounded"][0]).agg(
+        F.count(F.lit(1)).alias("n_clusters"),
+        F.coalesce(F.sum("n_removed"), F.lit(0)).alias("n_removed"),
+    ),
+    "ngram_jaccard_unbounded",
+    act=_first_row,
+)
+
+# KG document stream over the parquet fixture
+
+
+def _kg_edges(b: Bench):
+    return rewrite_triples(extract_docstream(b.kg.webdocs), b.mention_map)
+
+
+def _materialize_edges(b: Bench, df) -> str:
+    # PARTITIONED BY day (Iceberg days(warc_ts) emulation); a repeat
+    # rewrites the table instead of short-circuiting on its manifest
+    path = os.path.join(b.work, "edges_by_day")
+    shutil.rmtree(path, ignore_errors=True)
+    b.__dict__.pop("edges_tbl", None)
+    materialize_edges_by_day(df, path)
+    return path
+
+
+phase(
+    "kg_refdata",
+    lambda b: alias_resolution(b.kg.alias_df),
+    "kg",
+    act=lambda b, df: df.localCheckpoint(),
+)
+phase(
+    "kg_normalize",
+    lambda b: normalize(b.kg.webdocs),
+    "kg",
+    act=lambda b, df: df.write.format("noop").mode("overwrite").save(),
+)
+phase("kg_docstream", _kg_edges, "kg_refdata")
+# gazetteer mention scan (kg_mentions core path, fused: one python stage
+# like the docstream)
+phase(
+    "kg_mention_scan", lambda b: scan_mentions_docstream(b.kg.webdocs, b.aliases), "aliases"
+)
+phase(
+    "kg_edges_materialize",
+    lambda b: edges_with_day(_kg_edges(b)),
+    "kg_refdata",
+    act=_materialize_edges,
+)
+# reads the table back with the day window as a partition filter: the scan
+# touches ~1/6 of the day directories
+phase(
+    "kg_window_subgraph",
+    lambda b: window_subgraph_topk(b.spark, b.results["kg_edges_materialize"], k=1000),
+    "kg_edges_materialize",
+)
+
+# graph analytics over the materialized edge table, read back as a serving
+# system would; triangles and the 2-hop sketch are the skew stress tests
+# (the fixture's hot entity touches ~30% of docs): the exact wedge join is
+# quadratic in hub degree, HLL sketches bound it to one sketch row per edge
+phase("kg_entity_profile", lambda b: entity_profile(b.edges_tbl), "edges_tbl")
+phase("kg_triangles", lambda b: triangle_counts(b.edges_tbl), "edges_tbl")
+phase("kg_two_hop_sketch", lambda b: two_hop_reach_approx(b.edges_tbl), "edges_tbl")
+# HLL rollup twins: profile distinct-pred estimates + per-day distinct-node
+# estimates, constant bytes per group
+phase(
+    "kg_profile_sketch",
+    lambda b: (
+        entity_profile_table_approx(b.edges_tbl),
+        daily_active_nodes_approx(b.edges_tbl),
+    ),
+    "edges_tbl",
+)
+phase("kg_communities", lambda b: label_propagation(b.edges_tbl), "edges_tbl")
+phase(
+    "kg_pred_canon",
+    lambda b: canonicalize_predicates(b.edges_tbl).select("canon_pred").distinct(),
+    "edges_tbl",
+)
+# BGP serving queries: the UNANCHORED chain is the hub stress test (join
+# fan-out + distinct at adversarial selectivity); the ANCHORED chain is the
+# serving-latency path (the constant reaches the scan as a pushed filter)
+phase(
+    "kg_bgp_chain",
+    lambda b: match_bgp(b.edges_tbl, [("?x", "acquired", "?y"), ("?y", "works at", "?z")]),
+    "edges_tbl",
+)
+phase(
+    "kg_bgp_anchored",
+    lambda b: match_bgp(
+        b.edges_tbl, [("?x", "acquired", "?y"), ("?y", "located in", "E000001")]
+    ),
+    "edges_tbl",
+)
+# CYCLIC BGP, timed on both plans: the binary plan materializes every open
+# wedge before the closing join; the HyperCube + cell-local generic join
+# (graph/wcoj.py) bounds communication to O(shares x input)
+phase("kg_bgp_cycle_binary", lambda b: match_bgp(b.edges_tbl, CYCLE), "edges_tbl")
+phase("kg_bgp_cycle_wcoj", lambda b: match_bgp_cycle(b.edges_tbl, CYCLE), "edges_tbl")
+# SPARQL pred+: 4-hop any-predicate forward cone from the hot entity
+phase(
+    "kg_path_reach",
+    lambda b: reachable_from(b.edges_tbl, "E000001", None, max_hops=4),
+    "edges_tbl",
+)
+
+
+class Bench:
+    """One bench session: the Spark session plus shared state, each piece
+    made once, on first use."""
+
+    def __init__(self, fixture_dir: str | None = None):
+        self.sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+        self.cpus = cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        self.fixture_dir = fixture_dir
+        self.cores = int(cpus) if cpus.isdigit() else 32
+        # spark.sql.files.maxPartitionBytes stays at the 128MB default here:
+        # 2MB globally fragments the TPC-H scans into hundreds of
+        # micro-tasks (pricing_summary 8.1s → 0.7s at the default). The
+        # small-split config is applied to the KG phases only (``kg``).
+        self.spark = get_spark(
+            "kgforge-bench",
+            master=f"local[{cpus}]",
+            shuffle_partitions=max(16, self.cores * 2),
+            arrow_batch=2048,
         )
-        .collect()[0]
-    )
-    timings["near_dup_clusters_unbounded"] = round(time.perf_counter() - t0, 3)
-    total += (
-        timings["ngram_jaccard_unbounded"]
-        + timings["minhash_lsh_unbounded"]
-        + timings["near_dup_clusters_unbounded"]
-    )
-    unbounded = {
-        "documents_rows": n_docs_tbl,
-        "jaccard_pairs": jac_row["n_pairs"],
-        "minhash_candidate_pairs": mh_row["n_candidate_pairs"],
-        "near_dup_clusters": cl_row["n_clusters"],
-        "near_dup_removed": int(cl_row["n_removed"]),
-    }
+        self.work = tempfile.mkdtemp(prefix="kgforge_bench_")
+        self.results: dict[str, object] = {}
 
-    # KG document stream over parquet input. The 30k-doc fixture is only
-    # ~15MB of parquet: at the default 128MB split size the whole stream
-    # would land in one task, so the Python-bound phases below get 2MB
-    # splits (runtime-mutable SQL conf; scoped to these phases).
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(64 * 1024))
-    fx = tempfile.mkdtemp(prefix="kgforge_bench_")
-    t0 = time.perf_counter()
-    webdocs_path, alias_path = write_fixture_tables(
-        spark, fx, KG_BENCH_DOCS, partitions=max(64, n_cores * 4)
-    )
-    fixture_gen_sec = round(time.perf_counter() - t0, 3)
-    webdocs = spark.read.parquet(webdocs_path)
-    alias_df = spark.read.parquet(alias_path)
+    def _make_needs(self, p: Phase) -> None:
+        for need in p.needs:
+            if need in PHASES:
+                self.result(need)
+            else:
+                getattr(self, need)  # builds the cached resource
 
-    # warm every python-worker slot (imports + module init) before timing
-    # the Python-bound KG phases — same steady-state methodology as
-    # tools/_scaling_worker.py (BENCH.md): at 10^12-doc scale, worker
-    # spin-up amortizes to zero, and on a cold page cache the first
-    # pandas-UDF phase otherwise pays 32× (numpy+pandas+kgforge imports)
-    # of random IO inside its timed window (observed: 2.9 s → 22 s drift
-    # on kg_refdata as the shared host's page cache was evicted).
-    from kgforge.session import warm_python_workers
+    def run(self, name: str) -> float:
+        """Run one phase (its needs first, untimed); seconds taken."""
+        p = PHASES[name]
+        self._make_needs(p)
+        sc = self.spark.sparkContext
+        sc.setJobDescription(name)
+        t0 = time.perf_counter()
+        self.results[name] = p.act(self, p.build(self))
+        dt = round(time.perf_counter() - t0, 3)
+        sc.setJobDescription(None)
+        return dt
 
-    warm_python_workers(spark, n_cores)
+    def result(self, name: str):
+        if name not in self.results:
+            self.run(name)
+        return self.results[name]
 
-    t0 = time.perf_counter()
-    alias_map = alias_resolution(alias_df).localCheckpoint()
-    timings["kg_refdata"] = round(time.perf_counter() - t0, 3)
-    mention_map = alias_map.select(F.col("alias").alias("mention"), "canon_id")
+    def plan(self, name: str):
+        """The plan a phase times (its needs made first) or a contract
+        query's plan."""
+        if name not in PHASES:
+            return self.contract[name](self.spark, self.sf_dir)
+        self._make_needs(PHASES[name])
+        return PHASES[name].build(self)
 
-    t0 = time.perf_counter()
-    normalize(webdocs).write.format("noop").mode("overwrite").save()
-    timings["kg_normalize"] = round(time.perf_counter() - t0, 3)
+    def close(self) -> None:
+        self.spark.stop()
+        shutil.rmtree(self.work, ignore_errors=True)
 
-    t0 = time.perf_counter()
-    n_edges = rewrite_triples(extract_docstream(webdocs), mention_map).count()
-    timings["kg_docstream"] = round(time.perf_counter() - t0, 3)
+    @cached_property
+    def contract(self) -> dict[str, Callable]:
+        return contract_queries()
 
-    # gazetteer mention scan over the same corpus (kg_mentions core path,
-    # fused: one python stage like the docstream)
-    from kgforge.linking.guard import collect_bounded
-    from kgforge.stages.docstream import scan_mentions_docstream
+    @cached_property
+    def warm_jvm(self) -> None:
+        # the first action pays session init + whole-stage-codegen
+        # compilation (~5 s), which the first headline query would absorb;
+        # steady-state cost is the quantity that scales
+        self.spark.read.parquet(f"{self.sf_dir}/lineitem.parquet").limit(1000).groupBy(
+            "l_returnflag"
+        ).count().collect()
 
-    aliases = collect_bounded(alias_df, "alias", what="gazetteer alias dictionary")
-    t0 = time.perf_counter()
-    n_mentions = scan_mentions_docstream(webdocs, aliases).count()
-    timings["kg_mention_scan"] = round(time.perf_counter() - t0, 3)
+    @cached_property
+    def docs_full(self):
+        df = self.spark.read.parquet(f"{self.sf_dir}/documents.parquet")
+        self.documents_rows = df.count()
+        return df
 
-    # temporal graph phases: materialize the edge table PARTITIONED BY day
-    # (Iceberg days(warc_ts) emulation), then a time-window subgraph query
-    # that reads it back with the day predicate as a partition filter —
-    # the scan touches ~1/6 of the day directories, not the table
-    from kgforge.graph.temporal import (
-        WINDOW_HI,
-        WINDOW_LO,
-        materialize_edges_by_day,
-        window_subgraph_topk,
-    )
-    from kgforge.stages.canonicalize import edges_with_day
+    @cached_property
+    def kg(self):
+        """The webdocs + alias fixture, read with 2MB splits: the 30k-doc
+        fixture is only ~15MB of parquet, so at the default split size the
+        whole stream would land in one task."""
+        spark = self.spark
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
+        spark.conf.set("spark.sql.files.openCostInBytes", str(64 * 1024))
+        fx = self.fixture_dir or self.work
+        webdocs_path = os.path.join(fx, "webdocs.parquet")
+        alias_path = os.path.join(fx, "alias_dict.parquet")
+        gen_sec = 0.0
+        if not os.path.exists(webdocs_path):
+            t0 = time.perf_counter()
+            write_fixture_tables(
+                spark, fx, KG_BENCH_DOCS, partitions=max(64, self.cores * 4)
+            )
+            gen_sec = round(time.perf_counter() - t0, 3)
+        kg = SimpleNamespace(
+            webdocs=spark.read.parquet(webdocs_path),
+            alias_df=spark.read.parquet(alias_path),
+            docs=pads.dataset(webdocs_path).count_rows(),
+            gen_sec=gen_sec,
+        )
+        # warm every python-worker slot (imports + module init) before the
+        # Python-bound phases: on a cold page cache the first pandas-UDF
+        # phase otherwise pays every worker's imports inside its window
+        warm_python_workers(spark, self.cores)
+        return kg
 
-    edges_path = os.path.join(fx, "edges_by_day")
-    t0 = time.perf_counter()
-    materialize_edges_by_day(
-        edges_with_day(rewrite_triples(extract_docstream(webdocs), mention_map)),
-        edges_path,
-    )
-    timings["kg_edges_materialize"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    n_window_edges = window_subgraph_topk(spark, edges_path, k=1000).count()
-    timings["kg_window_subgraph"] = round(time.perf_counter() - t0, 3)
-    n_day_dirs = len([d for d in os.listdir(edges_path) if d.startswith("day=")])
-    n_window_dirs = len(
-        [
-            d
-            for d in os.listdir(edges_path)
-            if d.startswith("day=") and WINDOW_LO <= d[4:] <= WINDOW_HI
-        ]
-    )
+    @property
+    def mention_map(self):
+        return self.result("kg_refdata").select(
+            F.col("alias").alias("mention"), "canon_id"
+        )
 
-    # graph-analytics phases over the materialized edge table (round 4):
-    # read the day-partitioned parquet back — the serving-side pattern; the
-    # graph store is queried, the doc pipeline is not re-run. Degree-ordered
-    # triangle counting and the 2-hop wedge join are the skew stress tests
-    # (the fixture's hot entity touches ~30% of docs).
-    from kgforge.extract.predicates import canonicalize_predicates
-    from kgforge.graph.analytics import (
-        entity_profile,
-        label_propagation,
-        triangle_counts,
-        two_hop_reach_approx,
-    )
+    @cached_property
+    def aliases(self) -> list[str]:
+        return collect_bounded(
+            self.kg.alias_df, "alias", what="gazetteer alias dictionary"
+        )
 
-    edges_tbl = spark.read.parquet(edges_path)
-    t0 = time.perf_counter()
-    entity_profile(edges_tbl).count()
-    timings["kg_entity_profile"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    triangle_counts(edges_tbl).count()
-    timings["kg_triangles"] = round(time.perf_counter() - t0, 3)
-    # the SKETCH variant: the exact wedge join is quadratic in hub degree
-    # (measured 22.9 s at just 5k docs on this fixture's 30%-hot entity);
-    # HLL sketches bound the join to one sketch row per edge
-    t0 = time.perf_counter()
-    two_hop_reach_approx(edges_tbl).count()
-    timings["kg_two_hop_sketch"] = round(time.perf_counter() - t0, 3)
-    # HLL rollup twins (round-5, BACKLOG #12): profile distinct-pred
-    # estimates + per-day distinct-node estimates — the constant-bytes-
-    # per-group serving path beside the exact aggregates
-    from kgforge.graph.analytics import (
-        daily_active_nodes_approx,
-        entity_profile_table_approx,
-    )
+    @cached_property
+    def edges_tbl(self):
+        return self.spark.read.parquet(self.result("kg_edges_materialize"))
 
-    t0 = time.perf_counter()
-    entity_profile_table_approx(edges_tbl).count()
-    daily_active_nodes_approx(edges_tbl).count()
-    timings["kg_profile_sketch"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    label_propagation(edges_tbl).count()
-    timings["kg_communities"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    n_canon_preds = (
-        canonicalize_predicates(edges_tbl)
-        .select("canon_pred")
-        .distinct()
-        .count()
-    )
-    timings["kg_pred_canon"] = round(time.perf_counter() - t0, 3)
 
-    # BGP serving queries (round-5 second continuation). Two shapes:
-    # the UNANCHORED 2-pattern chain is the hub stress test — on this
-    # fixture's 30%-hot entity it fans to ~5M bindings, so the phase
-    # measures join fan-out + distinct at adversarial selectivity (the
-    # BGP sibling of the triangles/2-hop skew phases); the ANCHORED
-    # chain is the serving-latency path — the constant reaches the
-    # parquet scan as a pushed filter and bounds the output.
-    from kgforge.graph.bgp import match_bgp
-
-    t0 = time.perf_counter()
-    n_bgp = match_bgp(
-        edges_tbl,
-        [("?x", "acquired", "?y"), ("?y", "works at", "?z")],
-    ).count()
-    timings["kg_bgp_chain"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    n_bgp_anchored = match_bgp(
-        edges_tbl,
-        [("?x", "acquired", "?y"), ("?y", "located in", "E000001")],
-    ).count()
-    timings["kg_bgp_anchored"] = round(time.perf_counter() - t0, 3)
-
-    # CYCLIC BGP (round-5 WCOJ, BACKLOG #15): the works-at/acquired/
-    # works-at triangle routes both legs of the hub wedge through the
-    # 30%-hot entity. The binary plan must materialize every open wedge
-    # before the closing join can discard non-triangles; the HyperCube +
-    # cell-local generic-join path (graph/wcoj.py) bounds communication
-    # to O(shares x input) regardless of hub degree. Both are timed on
-    # the same pattern so the record carries the comparison.
-    from kgforge.graph.wcoj import match_bgp_cycle
-
-    cycle = [
-        ("?a", "works at", "?b"),
-        ("?b", "acquired", "?c"),
-        ("?c", "works at", "?a"),
-    ]
-    t0 = time.perf_counter()
-    n_cycle_binary = match_bgp(edges_tbl, cycle).count()
-    timings["kg_bgp_cycle_binary"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    n_cycle_wcoj = match_bgp_cycle(edges_tbl, cycle).count()
-    timings["kg_bgp_cycle_wcoj"] = round(time.perf_counter() - t0, 3)
-
-    # property path (SPARQL pred+): 4-hop any-predicate forward cone from
-    # the hot entity — driver-paced BFS, one keyed join per hop, seen-set
-    # anti-join bounds the frontier by unique nodes even through the hub
-    from kgforge.graph.paths import reachable_from
-
-    t0 = time.perf_counter()
-    n_reach = reachable_from(edges_tbl, "E000001", None, max_hops=4).count()
-    timings["kg_path_reach"] = round(time.perf_counter() - t0, 3)
-
-    total += (
-        timings["kg_refdata"]
-        + timings["kg_normalize"]
-        + timings["kg_docstream"]
-        + timings["kg_mention_scan"]
-        + timings["kg_edges_materialize"]
-        + timings["kg_window_subgraph"]
-        + timings["kg_entity_profile"]
-        + timings["kg_triangles"]
-        + timings["kg_two_hop_sketch"]
-        + timings["kg_profile_sketch"]
-        + timings["kg_communities"]
-        + timings["kg_pred_canon"]
-        + timings["kg_bgp_chain"]
-        + timings["kg_bgp_anchored"]
-        + timings["kg_bgp_cycle_binary"]
-        + timings["kg_bgp_cycle_wcoj"]
-        + timings["kg_path_reach"]
-    )
-
-    result = {
+def report(b: Bench, timings: dict[str, float]) -> dict:
+    """The JSON line: per-phase seconds plus the result fields of the
+    phases timed."""
+    r = b.results
+    out = {
         "metric": "kgforge_headline_sec",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": sf_dir,
-        "cpus": cpus,
-        "kg_docs": KG_BENCH_DOCS,
-        "kg_edges": n_edges,
-        "kg_fixture_gen_sec": fixture_gen_sec,
-        "kg_docs_per_sec": round(KG_BENCH_DOCS / timings["kg_docstream"], 2),
-        "kg_mentions_found": n_mentions,
-        "kg_window_topk_groups": n_window_edges,
-        "kg_day_partitions": n_day_dirs,
-        "kg_window_partitions_scanned": n_window_dirs,
-        "kg_canonical_predicates": n_canon_preds,
-        "kg_bgp_matches": n_bgp,
-        "kg_bgp_anchored_matches": n_bgp_anchored,
-        "kg_bgp_cycle_matches": {"binary": n_cycle_binary, "wcoj": n_cycle_wcoj},
-        "kg_path_reach_nodes": n_reach,
-        "unbounded_near_dup": unbounded,
+        "sf": b.sf_dir,
+        "cpus": b.cpus,
     }
-    spark.stop()
-    return result
+    if "kg" in vars(b):
+        out["kg_docs"] = b.kg.docs
+    if "kg_docstream" in timings:
+        out["kg_edges"] = r["kg_docstream"]
+    if "kg" in vars(b):
+        out["kg_fixture_gen_sec"] = b.kg.gen_sec
+    if "kg_docstream" in timings:
+        out["kg_docs_per_sec"] = round(b.kg.docs / timings["kg_docstream"], 2)
+    if "kg_mention_scan" in timings:
+        out["kg_mentions_found"] = r["kg_mention_scan"]
+    if "kg_window_subgraph" in timings:
+        days = [
+            d[4:] for d in os.listdir(r["kg_edges_materialize"]) if d.startswith("day=")
+        ]
+        out["kg_window_topk_groups"] = r["kg_window_subgraph"]
+        out["kg_day_partitions"] = len(days)
+        out["kg_window_partitions_scanned"] = sum(
+            WINDOW_LO <= d <= WINDOW_HI for d in days
+        )
+    for key, name in [
+        ("kg_canonical_predicates", "kg_pred_canon"),
+        ("kg_bgp_matches", "kg_bgp_chain"),
+        ("kg_bgp_anchored_matches", "kg_bgp_anchored"),
+    ]:
+        if name in timings:
+            out[key] = r[name]
+    cycle = {
+        plan: r[f"kg_bgp_cycle_{plan}"]
+        for plan in ("binary", "wcoj")
+        if f"kg_bgp_cycle_{plan}" in timings
+    }
+    if cycle:
+        out["kg_bgp_cycle_matches"] = cycle
+    if "kg_path_reach" in timings:
+        out["kg_path_reach_nodes"] = r["kg_path_reach"]
+    unbounded = {}
+    if "docs_full" in vars(b):
+        unbounded["documents_rows"] = b.documents_rows
+    if "ngram_jaccard_unbounded" in timings:
+        unbounded["jaccard_pairs"] = r["ngram_jaccard_unbounded"][1]
+    if "minhash_lsh_unbounded" in timings:
+        unbounded["minhash_candidate_pairs"] = r["minhash_lsh_unbounded"][
+            "n_candidate_pairs"
+        ]
+    if "near_dup_clusters_unbounded" in timings:
+        row = r["near_dup_clusters_unbounded"]
+        unbounded["near_dup_clusters"] = row["n_clusters"]
+        unbounded["near_dup_removed"] = int(row["n_removed"])
+    if unbounded:
+        out["unbounded_near_dup"] = unbounded
+    return out
 
 
-def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    print(json.dumps(run_bench(sf_dir, cpus)))
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description="kgforge phase benchmark")
+    ap.add_argument("phases", nargs="*", help="phase names (default: all, once)")
+    ap.add_argument("--repeat", type=int, default=1)
+    ap.add_argument(
+        "--fixture-dir",
+        help="read the KG fixture from here (generated here first if absent)",
+    )
+    args = ap.parse_args(argv)
+    unknown = [n for n in args.phases if n not in PHASES]
+    if unknown:
+        ap.error(f"unknown phases: {unknown}")
+    if args.repeat < 1:
+        ap.error("--repeat must be >= 1")
+    names = [n for n in PHASES if not args.phases or n in args.phases]
+
+    b = Bench(args.fixture_dir)
+    try:
+        best: dict[str, float] = {}
+        for rep in range(args.repeat):
+            for name in names:
+                dt = b.run(name)
+                best[name] = min(dt, best.get(name, dt))
+                if args.phases:
+                    print(f"[rep {rep}] {name}: {dt}", file=sys.stderr)
+        print(json.dumps(report(b, best)))
+    finally:
+        b.close()
     return 0
 
 

@@ -68,10 +68,10 @@ def warm_python_workers(spark: SparkSession, cores: int) -> None:
     """Pay Python-worker startup BEFORE any timed phase: module imports
     plus the lazy one-time Unicode scans (currency_regex, ALL_PUNCS —
     ~1-2 s each, measured via cProfile) by pushing one real doc through
-    the full normalize+extract path in every worker slot. Shared by
-    bench.py and tools/_scaling_worker.py so the two timed harnesses can
-    never drift (steady-state methodology: at crawl scale worker spin-up
-    amortizes to zero)."""
+    the full normalize+extract path in every worker slot. bench.py runs it
+    before its KG phases, including the per-core-count runs of
+    tools/run_scaling.py (steady-state methodology: at crawl scale worker
+    spin-up amortizes to zero)."""
 
     def _warm(batches):
         from kgforge.extract.triples import doc_triples

@@ -26,6 +26,12 @@ EDGES_SCHEMA = (
 )
 
 
+def self_entity_id(col: str):
+    """``M#`` + the first 12 hex digits of md5(col): the id an unlinked
+    mention gets, so every mention maps to some entity."""
+    return F.concat(F.lit("M#"), F.substring(F.md5(F.col(col)), 1, 12))
+
+
 def rewrite_triples(triples_df: DataFrame, mention_map: DataFrame) -> DataFrame:
     """triples_raw → edges with canonical subject/object ids (two broadcast
     joins on the small mention map)."""
@@ -39,15 +45,9 @@ def rewrite_triples(triples_df: DataFrame, mention_map: DataFrame) -> DataFrame:
         triples_df.join(F.broadcast(subj_map), "subj", "left")
         .join(F.broadcast(obj_map), "obj", "left")
         .select(
-            F.coalesce(
-                F.col("subj_id"),
-                F.concat(F.lit("M#"), F.substring(F.md5(F.col("subj")), 1, 12)),
-            ).alias("subj_id"),
+            F.coalesce(F.col("subj_id"), self_entity_id("subj")).alias("subj_id"),
             "pred",
-            F.coalesce(
-                F.col("obj_id"),
-                F.concat(F.lit("M#"), F.substring(F.md5(F.col("obj")), 1, 12)),
-            ).alias("obj_id"),
+            F.coalesce(F.col("obj_id"), self_entity_id("obj")).alias("obj_id"),
             "url",
             "warc_ts",
         )

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from kgforge.stages.canonicalize import self_entity_id
 from kgforge.stages.rows import flat_map_rows
 
 ENTITIES_SCHEMA = "mention string, entity_id string, canon string, score double"
@@ -80,10 +81,7 @@ def link(mentions_df: DataFrame, alias_df: DataFrame) -> DataFrame:
     )
     return best.select(
         "mention",
-        F.coalesce(
-            F.col("entity_id"),
-            F.concat(F.lit("M#"), F.substring(F.md5(F.col("mention")), 1, 12)),
-        ).alias("entity_id"),
+        F.coalesce(F.col("entity_id"), self_entity_id("mention")).alias("entity_id"),
         F.coalesce(F.col("canon"), F.col("mention")).alias("canon"),
         F.col("score"),
     )
@@ -132,10 +130,7 @@ def link_with_map(mentions_df: DataFrame, alias_map: DataFrame) -> DataFrame:
     )
     return joined.select(
         "mention",
-        F.coalesce(
-            F.col("canon_id"),
-            F.concat(F.lit("M#"), F.substring(F.md5(F.col("mention")), 1, 12)),
-        ).alias("canon_id"),
+        F.coalesce(F.col("canon_id"), self_entity_id("mention")).alias("canon_id"),
         F.coalesce(F.col("score"), F.lit(0.0)).alias("score"),
     )
 

@@ -218,15 +218,6 @@ def _flip_marker(marker: str, ckpt_identity: str, batch_id: int) -> None:
     os.replace(tmp, marker)
 
 
-def _edge_latest_agg(edges: DataFrame) -> DataFrame:
-    """Per-edge upsert record for one micro-batch — the SHARED batch
-    definition (graph.analytics.edge_latest_state), so the streaming state
-    and the batch table cannot drift."""
-    from kgforge.graph.analytics import edge_latest_state
-
-    return edge_latest_state(edges)
-
-
 def merge_edge_states(cur: DataFrame | None, batch_agg: DataFrame) -> DataFrame:
     """Combine the standing edge state with one micro-batch's aggregate:
     counts add, the (ts, url) witness takes the struct-max (``greatest``
@@ -316,6 +307,7 @@ def stream_upsert_edge_latest(
     proportional to the batch, not the table."""
     import os
 
+    from kgforge.graph.analytics import edge_latest_state
     from kgforge.stages.canonicalize import rewrite_triples
     from kgforge.stages.docstream import extract_docstream
 
@@ -337,7 +329,9 @@ def stream_upsert_edge_latest(
         if batch_id <= last_applied:
             return  # replay of an already-merged batch — exactly-once skip
         cur = read_edge_latest_state(batch_df.sparkSession, state_dir)
-        batch_agg = _edge_latest_agg(
+        # the batch table's own per-edge upsert definition, so the
+        # streaming state and the batch table cannot drift
+        batch_agg = edge_latest_state(
             rewrite_triples(extract_docstream(batch_df, backend=backend), mention_map)
         )
         out = os.path.join(state_dir, f"state_v{batch_id}")

@@ -73,6 +73,26 @@ def test_even_line_sampling_has_no_global_sort_window(spark):
     assert plan.count("Exchange SinglePartition") <= 1, plan
 
 
+def test_revenue_topk_broadcasts_dimensions(spark):
+    """3-way join + grouped top-k: the dimensions broadcast, no sort-merge
+    join, and one shuffle (the grouped aggregate; the top-k is a
+    TakeOrderedAndProject)."""
+    from kgforge.queries import q_revenue_topk
+
+    plan = _plan(q_revenue_topk(spark, "/root/testdata/sf0.001"))
+    assert plan.count("BroadcastHashJoin") >= 2, plan
+    assert "SortMergeJoin" not in plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_scan_dropna_projection_reaches_scan(spark):
+    """Only the three columns the query uses are read from parquet."""
+    from kgforge.queries import q_scan_dropna
+
+    plan = _plan(q_scan_dropna(spark, "/root/testdata/sf0.001"))
+    assert "ReadSchema: struct<text:string,lang:string,n_chars:bigint>" in plan, plan
+
+
 def test_mention_scan_has_no_shuffle(spark):
     """Gazetteer scan (kg_mentions core): normalize → sentence split →
     matcher are all narrow — the 100-TB-side cost is one pass, no

@@ -1,125 +1,113 @@
 #!/usr/bin/env python
-"""Scaling bench: identical input at local[8] vs local[32] (sandbox
-stand-in for N vs 4N executor clusters per the north rule); reports
-throughput at both levels + scaling efficiency and appends the table to
-BENCH.md. Each level runs in its own subprocess (a JVM's master is fixed
-at startup)."""
+"""Scaling bench: the KG document stream on identical input at N and 4N
+cores (a single-host stand-in for N vs 4N executors; on a 4-core host
+that is 1 vs 4).
+
+Each level is one ``bench.py kg_refdata kg_docstream --fixture-dir DIR``
+subprocess with ``SPARK_GRAFT_CPUS=<cores>`` (a JVM's master is fixed at
+startup); repeats interleave the levels and keep the best run per level.
+Without an existing fixture, a first ``bench.py`` run writes ``--docs``
+docs into DIR (a temp dir unless given).
+Prints each bench line, a summary JSON line and a markdown table to paste
+into BENCH.md.
+
+    python tools/run_scaling.py --docs 20000 --levels 1,4 --repeats 1
+"""
 
 from __future__ import annotations
 
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+
+
+def run_bench(env: dict[str, str], *argv: str) -> dict:
+    """One bench.py subprocess; its JSON line."""
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py"), *argv],
+        env={**os.environ, **env},
+        capture_output=True,
+        text=True,
+    )
+    if proc.returncode != 0:
+        sys.stderr.write(proc.stderr[-4000:] + "\n")
+        raise SystemExit(f"bench.py {env} failed (rc={proc.returncode})")
+    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
+    print(line)
+    return json.loads(line)
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=300000)
-    ap.add_argument(
-        "--levels",
-        default="2,8",
-        help="core counts; 2,8 keeps both configs below the single-host "
-        "memory-bandwidth ceiling (truer stand-in for adding executors); "
-        "8,32 also supported",
-    )
+    ap.add_argument("--levels", default="1,4", help="core counts, comma-separated")
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--fixture-dir", default=None, help="reuse existing fixture")
-    ap.add_argument("--out-md", default=os.path.join(REPO, "BENCH.md"))
     args = ap.parse_args()
 
-    from kgforge.fixtures.gen import write_fixture_tables
-    from kgforge.session import get_spark
-
-    if args.fixture_dir and os.path.exists(
-        os.path.join(args.fixture_dir, "webdocs.parquet")
-    ):
-        fx = args.fixture_dir
-        webdocs = os.path.join(fx, "webdocs.parquet")
-        alias = os.path.join(fx, "alias_dict.parquet")
-    else:
-        fx = args.fixture_dir or tempfile.mkdtemp(prefix="kgforge_scaling_")
-        spark = get_spark("kgforge-scaling-gen", master="local[32]")
-        webdocs, alias = write_fixture_tables(spark, fx, args.docs, partitions=256)
-        spark.stop()
+    fx = args.fixture_dir or tempfile.mkdtemp(prefix="kgforge_scaling_")
+    if not os.path.exists(os.path.join(fx, "webdocs.parquet")):
+        # bench.py writes the fixture at the session's default parallelism
+        run_bench({"KGFORGE_BENCH_DOCS": str(args.docs)}, "kg_refdata", "--fixture-dir", fx)
 
     levels = [int(c) for c in args.levels.split(",")]
     best: dict[int, dict] = {}
-    # interleave repeats (8,32,8,32,...) and keep the best run per level —
-    # damps transient host-load noise in the shared sandbox
+    # interleave repeats (1,4,1,4,...) and keep the best run per level:
+    # damps transient host-load noise
     for _ in range(args.repeats):
         for cores in levels:
-            proc = subprocess.run(
-                [
-                    sys.executable,
-                    os.path.join(REPO, "tools", "_scaling_worker.py"),
-                    "--master",
-                    f"local[{cores}]",
-                    "--webdocs",
-                    webdocs,
-                    "--alias",
-                    alias,
-                    "--cores",
-                    str(cores),
-                ],
-                capture_output=True,
-                text=True,
+            r = run_bench(
+                {"SPARK_GRAFT_CPUS": str(cores)},
+                "kg_refdata",
+                "kg_docstream",
+                "--fixture-dir",
+                fx,
             )
-            if proc.returncode != 0:
-                # surface the worker's own error (check=True swallowed it:
-                # a repeat-2 worker crash left nothing to diagnose)
-                sys.stderr.write(proc.stderr[-4000:] + "\n")
-                raise SystemExit(
-                    f"scaling worker local[{cores}] failed "
-                    f"(rc={proc.returncode})"
-                )
-            line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
-            r = json.loads(line)
-            print(line)
-            if cores not in best or r["elapsed_sec"] < best[cores]["elapsed_sec"]:
-                best[cores] = r
+            run = {
+                "cores": cores,
+                "n_docs": r["kg_docs"],
+                "n_edges": r["kg_edges"],
+                "elapsed_sec": r["queries"]["kg_docstream"],
+                "docs_per_sec": r["kg_docs_per_sec"],
+            }
+            if cores not in best or run["elapsed_sec"] < best[cores]["elapsed_sec"]:
+                best[cores] = run
+    if not args.fixture_dir:
+        shutil.rmtree(fx, ignore_errors=True)
     results = [best[c] for c in sorted(best)]
+    if len({r["n_edges"] for r in results}) != 1:
+        raise SystemExit(f"edge counts differ between levels: {results}")
 
     lo, hi = results[0], results[-1]
     speedup = hi["docs_per_sec"] / lo["docs_per_sec"]
     core_ratio = hi["cores"] / lo["cores"]
     efficiency = round(speedup / core_ratio, 4)
-    summary = {
-        "n_docs": args.docs,
-        "levels": results,
-        "speedup": round(speedup, 4),
-        "core_ratio": core_ratio,
-        "scaling_efficiency": efficiency,
-        "meets_north_rule": efficiency >= 0.8,
-    }
-    print(json.dumps(summary))
-
-    lines = [
-        "",
-        f"## Scaling run ({args.docs} docs, full KG pipeline)",
-        "",
-        "| parallelism | elapsed (s) | docs/sec |",
-        "|---|---|---|",
-    ]
-    for r in results:
-        lines.append(
-            f"| local[{r['cores']}] | {r['elapsed_sec']} | {r['docs_per_sec']} |"
+    print(
+        json.dumps(
+            {
+                "n_docs": lo["n_docs"],
+                "levels": results,
+                "speedup": round(speedup, 4),
+                "core_ratio": core_ratio,
+                "scaling_efficiency": efficiency,
+                "meets_north_rule": efficiency >= 0.8,
+            }
         )
-    lines += [
-        "",
-        f"speedup {lo['cores']}→{hi['cores']} cores: **{summary['speedup']}×** "
-        f"(core ratio {core_ratio}×) → scaling efficiency "
-        f"**{efficiency}** (north-rule gate ≥ 0.8: "
-        f"{'PASS' if summary['meets_north_rule'] else 'FAIL'})",
-        "",
-    ]
-    with open(args.out_md, "a") as fh:
-        fh.write("\n".join(lines))
+    )
+    print("\n| parallelism | elapsed (s) | docs/sec |\n|---|---|---|")
+    for r in results:
+        print(f"| local[{r['cores']}] | {r['elapsed_sec']} | {r['docs_per_sec']} |")
+    print(
+        f"\nspeedup {lo['cores']}→{hi['cores']} cores: **{round(speedup, 4)}×** "
+        f"(core ratio {core_ratio}×) → scaling efficiency **{efficiency}** "
+        f"(north-rule gate ≥ 0.8: {'PASS' if efficiency >= 0.8 else 'FAIL'})"
+    )
     return 0
 
 
