@@ -5,7 +5,7 @@ NPROC := $(shell env -u OMP_NUM_THREADS nproc)
 SEED ?= 0
 TRACE ?= 0
 
-.PHONY: test test-fast test-kernel bench plans correctness scaling pipeline zip clean perfbench perfbench-test
+.PHONY: test test-fast test-kernel test-tables bench plans correctness scaling pipeline zip clean perfbench perfbench-test
 
 test:
 	SPARK_GRAFT_CPUS=$(NPROC) $(PY) -m pytest tests/ -x -q
@@ -20,6 +20,12 @@ test-kernel:
 		tests/test_spark_normalize.py tests/test_extract.py tests/test_mentions.py \
 		tests/test_corpus_training.py tests/test_rechunk_distribution.py \
 		tests/test_subword_alignment.py tests/test_kernel_retry.py
+
+# table writes: commit/manifest, retry observation, resume, one file per
+# partition value, plan shapes (~4 min)
+test-tables:
+	SPARK_GRAFT_CPUS=$(NPROC) $(PY) -m pytest -q tests/test_tables_manifest.py \
+		tests/test_pipeline_resume.py tests/test_temporal.py tests/test_plans.py
 
 bench:
 	$(PY) bench.py

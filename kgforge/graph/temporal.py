@@ -56,23 +56,14 @@ def materialize_edges_by_day(
     edges_day_df: DataFrame, path: str, stage: str = "edges_by_day"
 ) -> None:
     """Write the edge table partitioned by ``day`` (resume-aware: a
-    committed manifest short-circuits the rewrite, same as every stage)."""
+    committed manifest short-circuits the rewrite, same as every stage).
+    ``write_table`` clusters by day, so this is the layout ``run_pipeline``
+    writes for its ``edges`` stage."""
     from kgforge.io.tables import is_committed, write_table
 
     if is_committed(path, stage):
         return
-    # cluster rows by day BEFORE the partitioned write: without this every
-    # input task writes a file into every day directory (tasks × days small
-    # files — a metadata bomb at crawl scale); one shuffle on day bounds the
-    # file count to the day-task count (AQE coalesces small days). On a
-    # real deployment with giant days, add a second split key:
-    # repartition("day", pmod(xxhash64(subj_id), N)).
-    write_table(
-        edges_day_df.repartition("day"),
-        path,
-        stage=stage,
-        partition_by=["day"],
-    )
+    write_table(edges_day_df, path, stage=stage, partition_by=["day"])
 
 
 def window_edge_diff_topk(

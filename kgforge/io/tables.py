@@ -7,14 +7,23 @@ write is made atomic-by-manifest — data lands first, then a
 order-insensitive table checksum, per-task lineage and marks the table
 committed.
 
-Committing costs one Spark job, the write. Row count and checksum are
-``DataFrame.observe`` metrics of the written frame, so they ride the write
-itself (a retried task is counted once: Spark merges only successful
+Committing costs the write and nothing after it. Row count and checksum
+are ``DataFrame.observe`` metrics of the written frame, so they ride the
+write itself (a retried task is counted once: Spark merges only successful
 attempts' accumulators). Lineage has one entry per write task, keyed by the
 ``part-NNNNN`` index of Spark's file names, with ``output_rows`` from the
 Parquet footers and ``output_bytes``/``files`` from the file sizes — the
 driver reads metadata only, like Iceberg's manifest entries
 (``record_count``, ``file_size_in_bytes``).
+
+A partitioned table is clustered by its partition key first
+(``clustered``: a ``rebalance`` hint, Iceberg's
+``write.distribution-mode=hash``), so each partition value lands in one
+write task and one file instead of one file per input task that touched
+it; AQE coalesces small values into shared tasks and splits oversized ones
+to the advisory size. That adds one shuffle stage to the write job. The
+observation sits above the exchange, in the stage that writes: a re-run
+map stage cannot count its rows twice.
 
 A stage whose manifest is present, committed and whose part files still
 match the per-task file counts and byte totals (``os.stat`` only) is
@@ -136,6 +145,13 @@ def is_committed(path: str, stage: str | None = None) -> bool:
     return _task_files(path) == committed
 
 
+def clustered(df: DataFrame, partition_by: list[str] | None) -> DataFrame:
+    """``df`` clustered by ``partition_by`` for a partitioned file write:
+    one task (so one file) per partition value, small values coalesced and
+    oversized ones split by AQE. Unpartitioned frames are returned as is."""
+    return df.hint("rebalance", *partition_by) if partition_by else df
+
+
 def write_table(
     df: DataFrame,
     path: str,
@@ -143,14 +159,19 @@ def write_table(
     partition_by: list[str] | None = None,
     use_iceberg: bool = False,
 ) -> dict:
-    """Write + commit a stage output table in one Spark job; returns the
-    manifest dict."""
+    """Write + commit a stage output table in one pass over ``df``: the
+    write, preceded by one rebalance shuffle stage when partitioned.
+    Returns the manifest dict."""
     partition_by = list(partition_by or [])
     # checksum in read-back column order: a Parquet directory returns its
-    # partition columns last (an Iceberg table keeps the frame's order)
+    # partition columns last (an Iceberg table keeps the frame's order and
+    # its own write distribution)
     cols = df.columns
     if not use_iceberg:
         cols = [c for c in cols if c not in partition_by] + partition_by
+        # before the observation, so it runs in the write stage, not in the
+        # map stage the exchange may re-run
+        df = clustered(df, partition_by)
     obs = Observation()
     observed = df.observe(
         obs, F.count(F.lit(1)).alias("n"), _row_hash_sum(cols).alias("h")

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgforge.io.tables import clustered
+
 WEBDOCS_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
@@ -35,8 +37,9 @@ def write_batch_idempotent(
     """Idempotent micro-batch sink: parquet under ``batch_id=<id>`` with
     overwrite, so an at-least-once replay of the same batch cannot
     duplicate rows. Readers see ``batch_id`` as a discovered partition
-    column of ``output_dir``."""
-    w = batch_df.write.mode("overwrite")
+    column of ``output_dir``. A partitioned batch is clustered by its
+    partition key like every ``io.tables`` write: one file per value."""
+    w = clustered(batch_df, partition_by).write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(f"{output_dir}/batch_id={batch_id}")

@@ -42,6 +42,7 @@ def test_pipeline_end_to_end_and_resume_identical(spark, fixture_paths, tmp_path
     sig_full = {
         s: _table_sig(spark, os.path.join(out1, s)) for s in stages
     }
+    _assert_one_file_per_day(os.path.join(out1, "edges"))
 
     # simulate partial failure: wipe the last two stages' outputs, keep the
     # first three committed; resume must rebuild only what's missing and
@@ -51,6 +52,17 @@ def test_pipeline_end_to_end_and_resume_identical(spark, fixture_paths, tmp_path
     run_pipeline(spark, webdocs_path, alias_path, out1, resume=True)
     for s in stages:
         assert _table_sig(spark, os.path.join(out1, s)) == sig_full[s], s
+    _assert_one_file_per_day(os.path.join(out1, "edges"))
+
+
+def _assert_one_file_per_day(path):
+    """The edges table is clustered by day: one part file per day
+    directory, not one per (write task, day)."""
+    day_dirs = [d for d in os.listdir(path) if d.startswith("day=")]
+    assert len(day_dirs) > 1
+    for d in day_dirs:
+        parts = [f for f in os.listdir(os.path.join(path, d)) if f.startswith("part-")]
+        assert len(parts) == 1, (d, parts)
 
 
 def test_resume_skips_committed_stages(spark, fixture_paths, tmp_path):

@@ -77,6 +77,11 @@ def test_stream_extract_edges_matches_batch(spark, tmp_path):
     q = stream_extract_edges(spark, webdocs_path, amap_path, out, ckpt)
     q.awaitTermination(180)
     got = spark.read.parquet(out)
+    # each micro-batch is clustered by day: one part file per day directory
+    day_dirs = glob.glob(os.path.join(out, "batch_id=*", "day=*"))
+    assert day_dirs
+    for d in day_dirs:
+        assert len(glob.glob(os.path.join(d, "part-*"))) == 1, d
 
     mention_map = spark.read.parquet(amap_path).select(
         F.col("alias").alias("mention"), "canon_id"

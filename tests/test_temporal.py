@@ -198,7 +198,7 @@ def test_window_edge_diff_matches_twin(spark, day_edges, tmp_path):
 
 
 def test_materialize_bounds_file_count(spark, day_edges, tmp_path):
-    """The pre-write repartition("day") bounds output files to one per day
+    """write_table's clustering by day bounds output files to one per day
     directory — without it every input task writes into every day dir
     (tasks × days small files, a metadata bomb at crawl scale)."""
     import glob
